@@ -109,8 +109,8 @@ def q_pattern_part_name(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_fk_orders_custkey(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Referential integrity via broadcast LEFT ANTI join
-    (sh:class semantics, SURVEY.md §2A #4). The dim is restricted to
+    """Referential integrity via a broadcast probe in the fused row
+    scan (sh:class semantics, SURVEY.md §2A #4). The dim is restricted to
     non-negative-balance customers so a real dangling-key set exists
     (the raw table's FK is intact by construction)."""
     o = _load(spark, sf_dir, "orders")

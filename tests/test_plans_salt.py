@@ -2,12 +2,13 @@
 
 The physical-plan assertions pin the scale-critical properties audited
 in PLANS.md: parquet predicate pushdown from the fused row scan, column
-pruning, broadcast anti-joins for dims, and single shared aggregations.
+pruning, broadcast probes for dims, and single shared aggregations.
 The salt test pins that the explicit two-phase salted aggregation
 (hot-key mitigation) is EXACT — same violation rows as the plain path.
 """
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.abspath(os.path.join(os.path.dirname(__file__), "..")))
@@ -43,33 +44,59 @@ def test_row_scan_predicate_pushdown(spark, tmp_path):
     assert "ReadSchema: struct<k:bigint,qty:double>" in plan
 
 
-def test_fk_small_dims_inline_big_dims_broadcast_anti(spark):
-    """r06 FK compilation split: dims at or under FK_INLINE_MAX rows
-    fuse into ONE shared isin filter scan (no join at all — the
-    transcript suite paid two scans + two joins for two tiny dims);
-    dims past the threshold keep the broadcast LEFT ANTI join and
-    never a sort-merge."""
-    df = transcripts(spark, n_convs=50)
-    engine = ValidationEngine(
-        spark, dims={"roles": roles_dim(spark), "tools": tools_dim(spark)}
-    )
-    shapes = [s for s in transcript_shapes() if "RefShape" in s.shape_id]
-    rep = engine.validate(df, shapes, key_cols=["conv_id", "turn_idx"])
-    plan = _plan(rep.violations)
-    assert "Join" not in plan, plan
-    assert "INSET" in plan or " IN (" in plan, plan
+def _input_hash_exchanges(plan: str) -> int:
+    """Hash Exchanges outside every BroadcastExchange subtree: the
+    shuffles of the validated table. (A ForeignKey probe's dedup of its
+    dim shuffles the dim only, under the probe's BroadcastExchange.)"""
+    n, bcast_depth = 0, None
+    for line in plan.splitlines():
+        m = re.search(r"[+:]- ", line)
+        depth = m.start() + 1 if m else 0
+        if bcast_depth is not None and depth <= bcast_depth:
+            bcast_depth = None
+        if bcast_depth is None and "BroadcastExchange" in line:
+            bcast_depth = depth
+        elif bcast_depth is None and "Exchange hashpartitioning" in line:
+            n += 1
+    return n
+
+
+def test_fk_probes_ride_the_row_scan_as_broadcast_joins(spark, tmp_path):
+    """Every ForeignKey compiles into the fused row scan as a broadcast
+    left-outer probe, whatever the dim's size: the fact table is scanned
+    once for the row+FK part and never shuffled for it, the probes are
+    broadcast hash joins (never a sort-merge, never a separate anti-join
+    pass), and the flagship suite keeps its two hash exchanges of the
+    input."""
+    p = str(tmp_path / "t.parquet")
+    transcripts(spark, n_convs=50).write.parquet(p)
+    df = spark.read.parquet(p)
+    keys = ["conv_id", "turn_idx"]
+    dims = {"roles": roles_dim(spark), "tools": tools_dim(spark)}
+
+    refs = [s for s in transcript_shapes() if "RefShape" in s.shape_id]
+    plan = _plan(ValidationEngine(spark, dims=dims).validate(df, refs, keys).violations)
+    assert plan.count("FileScan parquet") == 1, plan
+    assert plan.count("BroadcastHashJoin") == 2, plan
+    assert "LeftAnti" not in plan and "SortMergeJoin" not in plan, plan
+    assert _input_hash_exchanges(plan) == 0, plan
 
     big = spark.range(5000).select(F.col("id").alias("tool"))
-    engine_big = ValidationEngine(spark, dims={"tools": big})
-    shape = [s for s in transcript_shapes() if "ToolRef" in s.shape_id]
-    rep2 = engine_big.validate(
-        df.withColumn("tool", F.col("turn_idx").cast("long")),
-        shape,
-        key_cols=["conv_id", "turn_idx"],
+    tool = [s for s in transcript_shapes() if "ToolRef" in s.shape_id]
+    plan2 = _plan(
+        ValidationEngine(spark, dims={"tools": big})
+        .validate(df.withColumn("tool", F.col("turn_idx").cast("long")), tool, keys)
+        .violations
     )
-    plan2 = _plan(rep2.violations)
-    assert "BroadcastHashJoin" in plan2 and "LeftAnti" in plan2
-    assert "SortMergeJoin" not in plan2
+    assert plan2.count("FileScan parquet") == 1, plan2
+    assert "BroadcastHashJoin" in plan2, plan2
+    assert "LeftAnti" not in plan2 and "SortMergeJoin" not in plan2, plan2
+    assert _input_hash_exchanges(plan2) == 0, plan2
+
+    flagship = ValidationEngine(spark, dims=dims).validate(
+        df, transcript_shapes(), keys
+    )
+    assert _input_hash_exchanges(_plan(flagship.violations)) == 2
 
 
 def test_group_checks_share_one_aggregation(spark):

@@ -23,6 +23,7 @@ from xpshacl_spark.shapes_io import load_shapes
 from xpshacl_spark.shapes_ttl import import_ttl, shapes_from_ttl
 
 REF_TTL = "/root/reference/data/example_shapes.ttl"
+REF_DATA_TTL = os.path.join(os.path.dirname(REF_TTL), "example_data.ttl")
 
 EXAMPLE_SHAPES_TTL = """\
 @prefix sh: <http://www.w3.org/ns/shacl#> .
@@ -53,6 +54,30 @@ ex:OrganizationShape a sh:NodeShape ;
         sh:minCount 1 ;
     ] .
 """
+
+
+# the same three resources as _example_rows, as a Turtle data graph
+# (no foundedOn triple anywhere, like the reference's example_data.ttl)
+EXAMPLE_DATA_TTL = """\
+@prefix ex: <http://example.org/> .
+
+ex:resource1 a ex:Person ;
+    ex:hasAge -20 .
+
+ex:resource2 a ex:Person .
+
+ex:resource3 a ex:Organization ;
+    ex:hasName "Example Org" .
+"""
+
+
+def write_example_ttl(tmp_path) -> tuple[str, str]:
+    """EXAMPLE_DATA_TTL and EXAMPLE_SHAPES_TTL as files: (data, shapes)."""
+    paths = (str(tmp_path / "example_data.ttl"), str(tmp_path / "example_shapes.ttl"))
+    for path, text in zip(paths, (EXAMPLE_DATA_TTL, EXAMPLE_SHAPES_TTL)):
+        with open(path, "w") as f:
+            f.write(text)
+    return paths
 
 
 def _example_rows(spark):
@@ -253,13 +278,12 @@ ex:S a sh:NodeShape ;
     assert pat.pattern == "a\\nb"  # backslash + n survives
 
 
-def test_rdf_data_table_from_reference_file(spark):
-    """File-to-file parity with the reference CLI: its own
-    example_data.ttl + example_shapes.ttl through our engine reproduce
-    the README worked example (README.md:174-216) — 4 violations."""
+def _assert_example_files(spark, data_path, shapes_path):
+    """The README worked example (README.md:174-216) from Turtle data +
+    Turtle shapes files through our engine — 4 violations."""
     from xpshacl_spark.rdf_data import align_to_shapes, read_rdf_table
 
-    df = read_rdf_table(spark, "/root/reference/data/example_data.ttl")
+    df = read_rdf_table(spark, data_path)
     assert dict(df.dtypes) == {
         "id": "string", "rdf_type": "string", "hasAge": "bigint",
         "hasName": "string",
@@ -268,7 +292,7 @@ def test_rdf_data_table_from_reference_file(spark):
     assert rows["resource1"]["hasAge"] == -20
     assert rows["resource3"]["hasName"] == "Example Org"
 
-    shapes = load_shapes("/root/reference/data/example_shapes.ttl")
+    shapes = load_shapes(shapes_path)
     # the graph has no foundedOn triple at all; alignment adds the
     # absent-everywhere column so SHACL absence semantics apply
     df = align_to_shapes(df, shapes)
@@ -282,6 +306,19 @@ def test_rdf_data_table_from_reference_file(spark):
         ("resource2", "MinCountConstraintComponent"),
         ("resource3", "MinCountConstraintComponent"),
     ]
+
+
+def test_rdf_data_table_from_embedded_file(spark, tmp_path):
+    """Hermetic twin of the reference-file test below: the embedded
+    data and shapes fixtures, written to files, read back the same way."""
+    _assert_example_files(spark, *write_example_ttl(tmp_path))
+
+
+@pytest.mark.skipif(not os.path.exists(REF_DATA_TTL), reason="reference absent")
+def test_rdf_data_table_from_reference_file(spark):
+    """File-to-file parity with the reference CLI: its own
+    example_data.ttl + example_shapes.ttl."""
+    _assert_example_files(spark, REF_DATA_TTL, REF_TTL)
 
 
 def test_rdf_data_multivalued_predicate_becomes_array(spark):

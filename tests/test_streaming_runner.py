@@ -20,6 +20,8 @@ from xpshacl_spark.streaming import (
 )
 from xpshacl_spark.suites import transcript_shapes
 
+from test_shapes_ttl import REF_DATA_TTL, REF_TTL, write_example_ttl
+
 
 def _stream_from_parquet(spark, path):
     schema = spark.read.parquet(path).schema
@@ -38,13 +40,28 @@ def _run_to_memory(sdf, name):
     return sdf.sparkSession.sql(f"SELECT * FROM {name}")
 
 
-def test_stream_row_and_fk_checks_match_batch(spark, tmp_path):
+def _padded(dim, col, n):
+    """`dim` plus `n` keys no input row holds: same violations, bigger dim."""
+    pad = dim.sparkSession.range(n).select(
+        F.format_string("pad-%d", F.col("id")).alias(col)
+    )
+    return dim.unionByName(pad)
+
+
+@pytest.mark.parametrize("dim_rows", ["tiny_dims", "big_dims"])
+def test_stream_row_and_fk_checks_match_batch(spark, tmp_path, dim_rows):
     """The streaming violations relation must equal the batch engine's
-    on the same input — same fused row-scan compilation, same
-    stream-static broadcast anti-joins."""
+    on the same input — same fused row-scan compilation with its
+    stream-static broadcast probes — for tiny dims and for dims past
+    1024 rows."""
     p = str(tmp_path / "t.parquet")
     transcripts(spark, n_convs=120).write.parquet(p)
     dims = {"roles": roles_dim(spark), "tools": tools_dim(spark)}
+    if dim_rows == "big_dims":
+        dims = {
+            "roles": _padded(dims["roles"], "role", 2000),
+            "tools": _padded(dims["tools"], "tool", 2000),
+        }
     shapes = [
         s for s in transcript_shapes()
         if s.row_constraints() or s.join_constraints()
@@ -61,6 +78,7 @@ def test_stream_row_and_fk_checks_match_batch(spark, tmp_path):
     a = sorted(map(repr, streamed.collect()))
     b = sorted(map(repr, batch.violations.collect()))
     assert a == b and len(a) > 0
+    assert any("ClassConstraintComponent" in r for r in a)
 
 
 def test_stream_rejects_non_streamable(spark, tmp_path):
@@ -302,19 +320,15 @@ def test_spark_submit_py_files_end_to_end(spark, tmp_path):
     assert os.path.isdir(f"{out}/violations") and os.path.isdir(f"{out}/manifest")
 
 
-def test_runner_cli_ttl_data_and_shapes(spark, tmp_path):
+def _assert_runner_ttl(spark, tmp_path, data_path, shapes_path):
     """The reference CLI's exact entry shape — Turtle data + Turtle
-    shapes — through our runner: the README worked example's violation
-    counts come out of the JSON summary."""
+    shapes — through our runner: the README worked example's 4
+    violations come out."""
     from xpshacl_spark import runner
 
     out = str(tmp_path / "ttl_out")
     rc = runner.main(
-        [
-            "--input", "/root/reference/data/example_data.ttl",
-            "--shapes", "/root/reference/data/example_shapes.ttl",
-            "--output", out,
-        ]
+        ["--input", data_path, "--shapes", shapes_path, "--output", out]
     )
     assert rc == 3  # violations found
     v = spark.read.option("recursiveFileLookup", "true").parquet(
@@ -325,6 +339,18 @@ def test_runner_cli_ttl_data_and_shapes(spark, tmp_path):
         (r["id"], r["constraint_component"]) for r in v.collect()
     }
     assert ("resource1", "MinInclusiveConstraintComponent") in got
+
+
+def test_runner_cli_ttl_data_and_shapes_embedded(spark, tmp_path):
+    """Hermetic twin of the reference-file test below, on the embedded
+    Turtle fixtures of test_shapes_ttl."""
+    _assert_runner_ttl(spark, tmp_path, *write_example_ttl(tmp_path))
+
+
+@pytest.mark.skipif(not os.path.exists(REF_DATA_TTL), reason="reference absent")
+def test_runner_cli_ttl_data_and_shapes(spark, tmp_path):
+    """The same through the reference's own example files."""
+    _assert_runner_ttl(spark, tmp_path, REF_DATA_TTL, REF_TTL)
 
 
 def test_runner_cli_csv_and_jsonl_inputs(spark, tmp_path):

@@ -14,14 +14,18 @@ which violations are *born* structured. Scale design (SURVEY.md §7):
   explicit two-phase salted aggregation is provided for extreme keys).
 * Ordering constraints sharing (partition, order) share ONE window
   (one shuffle + sort).
-* Referential constraints compile to broadcast LEFT ANTI joins.
+* Referential constraints ride the same fused scan: the input is
+  left-outer joined to one broadcast probe (the dim's distinct keys
+  plus a hit flag) per distinct foreign key, and a missing hit is one
+  more `when(violated, struct(...))` element. No eager collect, no
+  extra pass over the input, no shuffle of the input (only the dim's
+  own dedup, under its broadcast).
 * Distribution constraints share ONE single-pass histogram aggregation;
   KS/PSI is computed on the driver from the tiny merged bin counts.
 
-The resulting plan has at most: 1 row-check scan + 1 shuffle per
-distinct group key + 1 shuffle per distinct window spec + anti-joins
-(broadcast, no shuffle) + 1 profiling scan — independent of the number
-of shapes.
+The resulting plan has at most: 1 row-check scan (with its broadcast
+probes) + 1 shuffle per distinct group key + 1 shuffle per distinct
+window spec + 1 profiling scan — independent of the number of shapes.
 """
 
 from __future__ import annotations
@@ -197,41 +201,9 @@ class ValidationEngine:
     def __init__(self, spark: SparkSession, dims: Optional[dict] = None):
         self.spark = spark
         self.dims: dict[str, DataFrame] = dict(dims or {})
-        # per-engine memo of small-dim FK membership probes: dim
-        # metadata (bounded by FK_INLINE_MAX), never query results;
-        # invalidated whenever the dim is re-registered
-        self._fk_probe_cache: dict[tuple, Optional[list]] = {}
 
     def register_dim(self, name: str, df: DataFrame) -> None:
         self.dims[name] = df
-        self._fk_probe_cache = {
-            k: v for k, v in self._fk_probe_cache.items() if k[0] != name
-        }
-
-    def _fk_inline_values(self, c) -> Optional[list]:
-        """Collected distinct non-null ref values for a single-column
-        FK whose dim holds <= FK_INLINE_MAX rows (probed with a limit
-        collect — bounded by the threshold, not the dim), or None when
-        the constraint must take the broadcast anti-join path. Memoized
-        per engine: the probe re-runs only when the dim is
-        re-registered."""
-        if len(c.columns) != 1:
-            return None
-        key = (c.ref_table, c.ref_columns[0])
-        if key not in self._fk_probe_cache:
-            head = (
-                self._dim(c.ref_table)
-                .select(F.col(c.ref_columns[0]).alias("_v"))
-                .dropDuplicates()
-                .limit(self.FK_INLINE_MAX + 1)
-                .collect()
-            )
-            self._fk_probe_cache[key] = (
-                [r["_v"] for r in head if r["_v"] is not None]
-                if len(head) <= self.FK_INLINE_MAX
-                else None
-            )
-        return self._fk_probe_cache[key]
 
     def _dim(self, name: str) -> DataFrame:
         if name not in self.dims:
@@ -316,7 +288,6 @@ class ValidationEngine:
                 df, shapes, key_cols, fused_uniques=fused_uniques
             )
         )
-        parts.extend(self._compile_fk_checks(df, shapes, key_cols))
         parts.extend(self._compile_fd_checks(df, shapes, key_cols))
         parts.extend(self._compile_dataset_checks(df, shapes, key_cols))
         parts.extend(self._compile_path_checks(df, shapes, key_cols))
@@ -384,6 +355,9 @@ class ValidationEngine:
     ) -> Optional[DataFrame]:
         structs: list[Column] = []
         any_violated: Optional[Column] = None
+        # hit-flag column per distinct (dim, fk cols, ref cols): shapes
+        # declaring the same FK share one probe
+        probes: dict[tuple, str] = {}
         for shape in shapes:
             target = _target_col(shape)
             for c in shape.row_constraints():
@@ -405,40 +379,48 @@ class ValidationEngine:
                         ),
                     )
                 )
-            # small-dim single-column FKs ride the SAME fused scan as a
-            # literal membership test (r06, guide §2.4): one pass for
-            # the row constraints AND these — _compile_fk_checks skips
-            # them. NULL fks pass (an equi join never matches NULL);
-            # the struct is byte-identical to the anti-join path's.
+            # ForeignKeys ride the SAME fused scan: a violation is a
+            # non-NULL fk tuple whose broadcast probe left the hit flag
+            # NULL (an equi join never matches NULL, so NULL fks pass)
             for c in shape.join_constraints():
-                vals = self._fk_inline_values(c)
-                if vals is None:
-                    continue
-                fk = F.col(c.columns[0])
-                miss = ~fk.isin(vals) if vals else F.lit(True)
-                violated = target & fk.isNotNull() & miss
+                pkey = (c.ref_table, tuple(c.columns), tuple(c.ref_columns))
+                hit = probes.setdefault(pkey, f"_fk_hit{len(probes)}")
+                violated = target & F.col(hit).isNull()
+                for fk in c.columns:
+                    violated = violated & F.col(fk).isNotNull()
                 any_violated = (
                     violated
                     if any_violated is None
                     else (any_violated | violated)
+                )
+                value = F.concat_ws(
+                    "|", *[F.col(x).cast("string") for x in c.columns]
                 )
                 ctx = F.create_map(
                     F.lit("refTable"), F.lit(c.ref_table),
                     F.lit("refColumns"), F.lit(",".join(c.ref_columns)),
                 )
                 structs.append(
-                    F.when(
-                        violated,
-                        _violation_struct(shape, c, fk.cast("string"), ctx),
-                    )
+                    F.when(violated, _violation_struct(shape, c, value, ctx))
                 )
         if not structs:
             return None
+        scan = df
+        for (ref_table, cols, ref_cols), hit in probes.items():
+            # the dim's distinct keys renamed to the fk names, so the
+            # left-outer join never multiplies input rows
+            probe = (
+                self._dim(ref_table)
+                .select(*[F.col(rc).alias(fk) for fk, rc in zip(cols, ref_cols)])
+                .dropDuplicates()
+                .withColumn(hit, F.lit(True))
+            )
+            scan = scan.join(F.broadcast(probe), on=list(cols), how="left")
         # Two-phase scan: a cheap all-predicate OR filter first, so the
         # allocation-heavy violation-struct array + explode only runs on
         # the (rare) violating rows. On healthy 100 TB inputs the fast
         # path is a pure codegen'd predicate scan that emits ~nothing.
-        pre = df.where(any_violated)
+        pre = scan.where(any_violated)
         arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
         # explode drops rows with empty arrays -> conforming rows vanish
         # before any downstream operator sees them.
@@ -777,58 +759,6 @@ class ValidationEngine:
                 *key_cols, "_v.*"
             )
             outs.append(out)
-        return outs
-
-    # ------------------------------------------------------------------
-    # referential integrity: broadcast LEFT ANTI joins
-    # ------------------------------------------------------------------
-
-    #: single-column FK dims at or under this row count are inlined as
-    #: literal membership sets into ONE fused filter scan (probed with
-    #: a limit collect, so the probe is bounded by the threshold, not
-    #: the dim)
-    FK_INLINE_MAX = 1024
-
-    def _compile_fk_checks(
-        self, df: DataFrame, shapes: Sequence[Shape], key_cols: list[str]
-    ) -> list[DataFrame]:
-        """ForeignKey checks via broadcast LEFT ANTI join — the
-        at-scale shape for real dims. Small single-column dims (r06,
-        guide §2.4) are NOT compiled here: `_compile_row_checks`
-        inlines them into the fused row scan as literal membership
-        tests (a transcript suite with two 4-20-row dims was paying
-        two full input scans plus two joins for what is an isin); the
-        `_fk_inline_values` probe decides, memoized per engine."""
-        outs = []
-        for shape in shapes:
-            for c in shape.join_constraints():
-                if self._fk_inline_values(c) is not None:
-                    continue
-                dim = self._dim(c.ref_table)
-                # rename dim cols to fk names so the anti join is an equi
-                # join on the fk columns themselves
-                sel = [
-                    F.col(rc).alias(fk)
-                    for fk, rc in zip(c.columns, c.ref_columns)
-                ]
-                dim_keys = dim.select(*sel).dropDuplicates()
-                cond = _target_col(shape)
-                for fk in c.columns:
-                    cond = cond & F.col(fk).isNotNull()
-                viol_rows = df.where(cond).join(
-                    F.broadcast(dim_keys), on=list(c.columns), how="left_anti"
-                )
-                value = F.concat_ws(
-                    "|", *[F.col(x).cast("string") for x in c.columns]
-                )
-                ctx = F.create_map(
-                    F.lit("refTable"), F.lit(c.ref_table),
-                    F.lit("refColumns"), F.lit(",".join(c.ref_columns)),
-                )
-                out = viol_rows.select(
-                    *key_cols, _violation_struct(shape, c, value, ctx).alias("_v")
-                ).select(*key_cols, "_v.*")
-                outs.append(out)
         return outs
 
     # ------------------------------------------------------------------

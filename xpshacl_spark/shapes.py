@@ -1165,8 +1165,9 @@ class ForeignKey(Constraint):
     """Referential integrity (generalizes sh:class membership,
     extended_shacl_validator.py:92 / shark_shapes.ttl:182,193): the
     column tuple must exist in dimension table `ref_table` columns
-    `ref_columns`. Compiled to a broadcast LEFT ANTI join; NULL FKs are
-    absent values and pass (use NotNull to forbid)."""
+    `ref_columns`. Compiled into the fused row scan as a broadcast
+    left-outer probe of the dim's distinct keys; NULL FKs (any column
+    NULL) are absent values and pass (use NotNull to forbid)."""
 
     columns: tuple
     ref_table: str

@@ -5,10 +5,10 @@ streaming out of the reference's scope), but transcript tables are
 typically FED by a stream, so the engine exposes the subset of checks
 whose semantics survive unbounded input:
 
-* row-level constraints — stateless map/filter, identical plan to the
-  batch fused scan (same compiler code path);
-* referential checks — stream-static broadcast LEFT ANTI joins
-  (supported by Structured Streaming);
+* row-level and referential constraints — the batch fused scan, same
+  compiler code path: a stateless map/filter whose foreign keys are
+  stream-static broadcast LEFT OUTER probes (stream on the left, which
+  Structured Streaming supports);
 * cardinality per event-time window — `windowed_min_count` /
   `windowed_max_count`: watermarked tumbling-window counts emitted in
   append mode once the watermark closes the window;
@@ -63,14 +63,9 @@ def validate_stream(
         )
     key_cols = list(key_cols)
     engine = ValidationEngine(stream_df.sparkSession, dims=dims or {})
-    parts: list[DataFrame] = []
-    row_df = engine._compile_row_checks(stream_df, shapes, key_cols)
-    if row_df is not None:
-        parts.append(row_df)
-    parts.extend(engine._compile_fk_checks(stream_df, shapes, key_cols))
-    if not parts:
+    violations = engine._compile_row_checks(stream_df, shapes, key_cols)
+    if violations is None:
         raise ValueError("no streamable constraints in the given shapes")
-    violations = reduce(lambda a, b: a.unionByName(b), parts)
     return engine._with_focus_node(violations, key_cols)
 
 
